@@ -1163,15 +1163,20 @@ def contamination_hits(
     Scale shape: the benchmark shingle set is distinct-aggregated and
     BROADCAST (eval sets are tiny next to a 100 TB corpus), so the
     corpus side is one scan + explode + broadcast-hash-join; the only
-    shuffle is the final per-doc count, keyed on the doc id."""
+    shuffle is the final per-doc count, keyed on the doc id.
+
+    n-grams match on 60-bit hashes, the same as
+    :func:`bloom_contamination_hits`: distinct n-grams falsely match
+    about |corpus n-grams| × |benchmark n-grams| / 2^bits times, which
+    at 32 bits can flag a clean doc even in a 400-doc corpus."""
     bench = (
         benchmark.select(
-            F.explode(shingle_hashes(text_col, n)).alias("h")
+            F.explode(shingle_hashes(text_col, n, hash_bits=60)).alias("h")
         ).distinct()
     )
     corp = _fanned(corpus, id_col, text_col).select(
         F.col(id_col).alias("__id"),
-        F.explode(shingle_hashes(text_col, n)).alias("h"),
+        F.explode(shingle_hashes(text_col, n, hash_bits=60)).alias("h"),
     )
     return (
         corp.join(F.broadcast(bench), "h")

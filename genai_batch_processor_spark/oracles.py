@@ -1215,10 +1215,12 @@ ORACLES["doc_repetition"] = f"""
 
 ORACLES["decontaminate"] = f"""
     WITH bench AS (
-      SELECT DISTINCT unnest({dedup.sql_shingle_hashes('text', dedup.CONTAMINATION_N)}) AS h
+      SELECT DISTINCT unnest({dedup.sql_shingle_hashes(
+          'text', dedup.CONTAMINATION_N, hash_bits=60)}) AS h
       FROM documents WHERE doc_id < {_q.BENCHMARK_MAX_DOC_ID}
     ), corp AS (
-      SELECT doc_id, unnest({dedup.sql_shingle_hashes('text', dedup.CONTAMINATION_N)}) AS h
+      SELECT doc_id, unnest({dedup.sql_shingle_hashes(
+          'text', dedup.CONTAMINATION_N, hash_bits=60)}) AS h
       FROM documents WHERE doc_id >= {_q.BENCHMARK_MAX_DOC_ID}
     )
     SELECT c.doc_id, CAST(count(DISTINCT c.h) AS BIGINT) AS n_hits

@@ -9,6 +9,9 @@ against the oracle after sorting columns by name).
 
 from __future__ import annotations
 
+import threading
+from concurrent.futures import Future
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -43,52 +46,119 @@ def _documents_with_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ids.assign_ids(docs, "doc_id")
 
 
-# Verified MinHash near-dup pairs, shared by near_dup_pairs /
-# dedup_components / dedup_components_star / dedup_survivors. Each of
-# those used to re-shingle and re-hash the whole corpus; the pair
-# relation is tiny (one row per verified duplicate pair), so persist it
-# once per (session, sf_dir) and every family member after the first
-# reads the materialized stage instead of recomputing the signature
-# scan. At 100 TB the same seam is a parquet temp table written by the
-# signature job and scanned by the downstream dedup jobs.
-_PAIRS_CACHE: dict[tuple[int, str], DataFrame] = {}
+# -- session-shared stages ---------------------------------------------------
+# Expensive intermediate relations (MinHash pairs, band / span / cell
+# indexes, trained centroids, ANN top-k sets) are built once per
+# session and reused by every later query that consumes them. Every
+# *_shared helper below goes through the one store behind _shared.
 
-# Every session-shared persisted stage cache below shares one bounded
-# insert (r8 advice, generalized in r9): keys are (appId, sf_dir, ...),
-# inserts past the cap unpersist-and-evict oldest-first, and
-# invalidate_shared_stages() (end of module) is the official staleness
-# hook after a fixture is regenerated mid-session — the caches
-# otherwise keep serving the old files, same contract as Spark's own
-# file-status cache.
-_STAGE_CACHE_MAX = 8
+_STAGE_CACHE_MAX = 8  # completed entries kept per stage name
+_stages: dict[tuple, Future] = {}
+_stages_lock = threading.Lock()
 
 
-def _stage_cache_put(cache: dict, key, df: DataFrame) -> DataFrame:
-    """Bounded insert for a session-shared persisted stage: beyond
-    _STAGE_CACHE_MAX entries the oldest is unpersisted and evicted, so
-    iterating many sf_dirs in one session cannot grow persisted memory
-    without bound — in ANY of the stage caches, not just the blocking
-    stages the r8 advice named."""
-    while len(cache) >= _STAGE_CACHE_MAX:
-        cache.pop(next(iter(cache))).unpersist()
-    cache[key] = df
-    return df
+def _shared(spark: SparkSession, sf_dir: str, name: str, *params, build):
+    """Get-or-build the session-shared stage ``name`` over ``sf_dir``.
+
+    The store is keyed by ``(appId, sf_dir, name, *params)``; ``build``
+    is a no-argument callable that applies the stage's own
+    materialization (``.persist()`` or ``.localCheckpoint(eager=True)``)
+    or returns a driver-side value. The lock guards only the store,
+    never a build: distinct keys build concurrently, a build may
+    request other stages without deadlock, and a key requested twice
+    at once builds once — later callers wait on the in-flight future.
+    A build that raises leaves no entry behind, so the next call
+    rebuilds. Past _STAGE_CACHE_MAX completed entries of one stage
+    name the oldest is dropped (DataFrames unpersisted), so iterating
+    many sf_dirs in one session cannot grow cached memory without
+    bound.
+
+    Staleness: entries live for the whole session. If the files under
+    ``sf_dir`` are regenerated mid-session the stage keeps serving the
+    old data, the same contract as Spark's own file-status cache; call
+    invalidate_shared_stages after rewriting a fixture.
+
+    Executor loss depends on the materialization:
+
+    - a persisted stage keeps its lineage, so lost blocks are
+      recomputed from the source files;
+    - a ``localCheckpoint`` leaf has no lineage, so a lost block fails
+      every job that consumes it until invalidate_shared_stages drops
+      the entry and the next call rebuilds it. ``unpersist()`` does
+      nothing on a checkpointed frame: its blocks are freed by the
+      ContextCleaner once the dropped entry held the last reference.
+    """
+    key = (spark.sparkContext.applicationId, sf_dir, name, *params)
+    with _stages_lock:
+        fut = _stages.get(key)
+        owner = fut is None
+        if owner:
+            fut = _stages[key] = Future()
+    if not owner:
+        return fut.result()
+    try:
+        value = build()
+    except BaseException as exc:
+        with _stages_lock:
+            if _stages.get(key) is fut:
+                del _stages[key]
+        fut.set_exception(exc)
+        raise
+    with _stages_lock:
+        fut.set_result(value)
+        if _stages.get(key) is fut:  # not invalidated mid-build
+            _stages[key] = _stages.pop(key)  # evict in completion order
+        done = [k for k, f in _stages.items() if k[2] == name and f.done()]
+        evicted = [
+            _stages.pop(k)
+            for k in done[: max(0, len(done) - _STAGE_CACHE_MAX)]
+        ]
+    _unpersist(evicted)
+    return value
+
+
+def _unpersist(futures: list[Future]) -> None:
+    for fut in futures:
+        if fut.done() and isinstance(fut.result(), DataFrame):
+            fut.result().unpersist()
+
+
+def invalidate_shared_stages(
+    sf_dir: str | None = None, name: str | None = None
+) -> int:
+    """Drop every session-shared stage, or only those built over
+    ``sf_dir`` and/or named ``name``, unpersisting DataFrames: the
+    staleness hook after a fixture or table is regenerated mid-session
+    (see _shared). Returns the number of entries dropped."""
+    with _stages_lock:
+        keys = [
+            k
+            for k in _stages
+            if (sf_dir is None or k[1] == sf_dir)
+            and (name is None or k[2] == name)
+        ]
+        dropped = [_stages.pop(k) for k in keys]
+    _unpersist(dropped)
+    return len(dropped)
 
 
 def _near_dup_pairs_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _PAIRS_CACHE.get(key)
-    if df is None:
-        docs = load_table(spark, sf_dir, "documents")
-        df = _stage_cache_put(
-            _PAIRS_CACHE,
-            key,
-            dedup.near_dup_pairs(docs, "doc_id", "text").persist(),
-        )
-    return df
-
-
-_COMPONENTS_CACHE: dict[tuple[str, str], DataFrame] = {}
+    """Verified MinHash near-dup pairs, shared by near_dup_pairs /
+    dedup_components / dedup_components_star / dedup_survivors. Each
+    of those used to re-shingle and re-hash the whole corpus; the pair
+    relation is tiny (one row per verified duplicate pair), so it is
+    persisted once and every family member after the first reads the
+    materialized stage. At 100 TB the same seam is a parquet temp
+    table written by the signature job and scanned by the downstream
+    dedup jobs."""
+    return _shared(
+        spark,
+        sf_dir,
+        "near_dup_pairs",
+        build=lambda: dedup.near_dup_pairs(
+            load_table(spark, sf_dir, "documents"), "doc_id", "text"
+        ).persist(),
+    )
 
 
 def _components_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -98,32 +168,14 @@ def _components_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     iterative CC over the shared pair stage. (dedup_components_star
     deliberately stays separate: it exists to prove the alternative
     algorithm produces identical labels.)"""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _COMPONENTS_CACHE.get(key)
-    if df is None:
-        pairs = _near_dup_pairs_shared(spark, sf_dir)
-        df = dedup.connected_components(pairs).persist()
-        _stage_cache_put(_COMPONENTS_CACHE, key, df)
-    return df
-
-
-_SIMHASH_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
-_DOC_COUNT_CACHE: dict[tuple[str, str], int] = {}
-
-
-def _doc_count_shared(spark: SparkSession, sf_dir: str) -> int:
-    """Memoized documents row count per (session, sf_dir) — the
-    corpus-size scalar the adaptive SimHash width and bucket cap
-    derive from (r9 advice: q_simhash ran a full docs.count() action
-    on every invocation solely to pick the width). Same scalar-cache
-    pattern as _ADAPTIVE_K_CACHE; invalidated by
-    invalidate_shared_stages."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    n = _DOC_COUNT_CACHE.get(key)
-    if n is None:
-        n = load_table(spark, sf_dir, "documents").count()
-        _DOC_COUNT_CACHE[key] = n
-    return n
+    return _shared(
+        spark,
+        sf_dir,
+        "components",
+        build=lambda: dedup.connected_components(
+            _near_dup_pairs_shared(spark, sf_dir)
+        ).persist(),
+    )
 
 
 def _simhash_pairs_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -131,64 +183,64 @@ def _simhash_pairs_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     by simhash_near_dup and the method-agreement audit — the audit
     references the pair relation twice in one plan, and without the
     persist the banding fan-out would execute twice (round-4 review
-    finding; mirrors _near_dup_pairs_shared)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _SIMHASH_PAIRS_CACHE.get(key)
-    if df is None:
+    finding; mirrors _near_dup_pairs_shared). The corpus size the
+    width and bucket cap derive from is the shared ``doc_count``
+    scalar q_simhash also reads (r9 advice: one count per session,
+    not one per invocation)."""
+
+    def build() -> DataFrame:
         docs = load_table(spark, sf_dir, "documents")
-        n = _doc_count_shared(spark, sf_dir)
-        df = dedup.simhash_near_dup_pairs(
+        n = _shared(spark, sf_dir, "doc_count", build=docs.count)
+        return dedup.simhash_near_dup_pairs(
             docs,
             "doc_id",
             "text",
             max_bucket=dedup.adaptive_max_bucket(n),
             width=dedup.adaptive_simhash_width(n),
         ).persist()
-        _stage_cache_put(_SIMHASH_PAIRS_CACHE, key, df)
-    return df
 
-
-# Trained IVF centroids, shared by embedding_topk_ivf_trained and
-# embedding_ann_recall: training is 2 Lloyd iterations over the corpus —
-# identical every time (deterministic init + scaled-integer means), so
-# train once per (session, sf_dir). The cached value is k × dim floats
-# of driver state, the same footprint the trainer itself holds.
-_CENTROID_CACHE: dict[tuple[str, str, int], list] = {}
-_ADAPTIVE_K_CACHE: dict[tuple[str, str], int] = {}
+    return _shared(spark, sf_dir, "simhash_pairs", build=build)
 
 
 def _trained_centroids_shared(
     spark: SparkSession, sf_dir: str, k: int | None = None
 ) -> list:
-    """``k=None`` derives k from the embedding corpus
+    """Trained IVF centroids, shared by the IVF family, SemDeDup and
+    the incremental embedding probes: training is 2 Lloyd iterations
+    over the corpus — identical every time (deterministic init +
+    scaled-integer means), so train once per (session, sf_dir, k).
+    The value is k × dim floats of driver state, the same footprint
+    the trainer itself holds.
+
+    ``k=None`` derives k from the embedding corpus
     (clustering.adaptive_k — the SemDeDup raise-k-at-scale contract,
     automatic since round 6); the IVF family passes an explicit
     KMEANS_K because its recall semantics are pinned by the
-    n_probe/n_cells ratio, not by cell population. The cache keys on
+    n_probe/n_cells ratio, not by cell population. The key carries
     the RESOLVED k, so at fixture scales (where adaptive k ==
     KMEANS_K) one training still serves every consumer."""
     from genai_batch_processor_spark.operators import clustering
 
-    app = spark.sparkContext.applicationId
     if k is None:
-        k = _ADAPTIVE_K_CACHE.get((app, sf_dir))
-        if k is None:
-            emb = load_table(spark, sf_dir, "embeddings")
-            k = clustering.adaptive_k(emb.count())
-            _ADAPTIVE_K_CACHE[(app, sf_dir)] = k
-    key = (app, sf_dir, k)
-    cents = _CENTROID_CACHE.get(key)
-    if cents is None:
-        emb = load_table(spark, sf_dir, "embeddings")
-        cents = clustering.centroids_from_cells(
-            clustering.kmeans_cells(emb, k=k)
+        k = _shared(
+            spark,
+            sf_dir,
+            "adaptive_k",
+            build=lambda: clustering.adaptive_k(
+                load_table(spark, sf_dir, "embeddings").count()
+            ),
         )
-        _CENTROID_CACHE[key] = cents
-    return cents
-
-
-_ANN_TOPK_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-_IVF_SCORED_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+    return _shared(
+        spark,
+        sf_dir,
+        "centroids",
+        k,
+        build=lambda: clustering.centroids_from_cells(
+            clustering.kmeans_cells(
+                load_table(spark, sf_dir, "embeddings"), k=k
+            )
+        ),
+    )
 
 
 def _ann_queries(spark: SparkSession, sf_dir: str):
@@ -204,28 +256,30 @@ def _ivf_scored_shared(
     this makes r13's 'scores each candidate once' claim literally true
     (r13 verdict item 9: the plain shared plan was inlined per union
     branch; Spark does not CSE across branches without a
-    materialization). Bounded: |queries| × corpus/cells × max_probe
-    rows (a few thousand at fixture scale; |queries| is the bounded
-    audit set by contract). Consumers: the per-method top-k cache
-    below (both IVF variants) and the probe sweep's slices."""
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        "trained" if trained else "plain",
-    )
-    df = _IVF_SCORED_CACHE.get(key)
-    if df is None:
+    materialization). Size: |queries| × corpus/cells × max_probe rows,
+    so it grows with the corpus (a few thousand rows at fixture scale,
+    where |queries| is the fixed audit set). Consumers: the per-method
+    top-k stage below (both IVF variants) and the probe sweep's
+    slices."""
+
+    def build() -> DataFrame:
         emb, qs = _ann_queries(spark, sf_dir)
         cents = (
             _trained_centroids_shared(spark, sf_dir, k=_KMEANS_K)
             if trained
             else None
         )
-        df = similarity.scored_ivf_candidates(
+        return similarity.scored_ivf_candidates(
             emb, qs, centroids=cents, n_probe=max(_SWEEP_PROBES)
         ).localCheckpoint(eager=True)
-        _stage_cache_put(_IVF_SCORED_CACHE, key, df)
-    return df
+
+    return _shared(
+        spark,
+        sf_dir,
+        "ivf_scored",
+        "trained" if trained else "plain",
+        build=build,
+    )
 
 
 def _topk_method_shared(
@@ -241,9 +295,8 @@ def _topk_method_shared(
     four method trees into one union plan, paying ~3 s of Catalyst
     planning per run on top of re-scoring relations the individual
     queries also compute."""
-    key = (spark.sparkContext.applicationId, sf_dir, method)
-    df = _ANN_TOPK_CACHE.get(key)
-    if df is None:
+
+    def build() -> DataFrame:
         emb, qs = _ann_queries(spark, sf_dir)
         if method == "exact":
             df = similarity.topk_bruteforce(emb, qs)
@@ -260,9 +313,9 @@ def _topk_method_shared(
             )
         else:  # pragma: no cover - caller typo guard
             raise ValueError(f"unknown ANN method {method!r}")
-        df = df.localCheckpoint(eager=True)
-        _stage_cache_put(_ANN_TOPK_CACHE, key, df)
-    return df
+        return df.localCheckpoint(eager=True)
+
+    return _shared(spark, sf_dir, "ann_topk", method, build=build)
 
 
 def _ann_truth_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -569,7 +622,8 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from genai_batch_processor_spark.functions.fanout import fan_out
 
     docs = load_table(spark, sf_dir, "documents")
-    bits, _ = dedup.adaptive_simhash_width(_doc_count_shared(spark, sf_dir))
+    n = _shared(spark, sf_dir, "doc_count", build=docs.count)
+    bits, _ = dedup.adaptive_simhash_width(n)
     # fan_out before the per-doc SimHash (profiled: one 1.6 s task at
     # sf0.1 without it; no-op at scale).
     return fan_out(docs.select("doc_id", "text")).select(
@@ -957,10 +1011,11 @@ def q_embedding_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the old single union plan ran the four scoring branches
     # concurrently inside one action; building the shared leaves
     # serially would forfeit that, so the first consumer builds them
-    # from a small thread pool (methods key distinct cache entries, so
-    # no same-key double-build; Spark schedules concurrent actions
-    # FIFO, back-filling the tail). The trained-IVF build trains the
-    # shared centroids if this session hasn't yet.
+    # from a small thread pool (methods key distinct stage entries, and
+    # _shared builds a key requested concurrently only once; Spark
+    # schedules concurrent actions FIFO, back-filling the tail). The
+    # trained-IVF build trains the shared centroids if this session
+    # hasn't yet.
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=5) as pool:
@@ -3783,48 +3838,20 @@ def _parts_with_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Shared persisted blocking stages (round-7 verdict item 5): the
-# recall audit re-consumes BOTH candidate relations that
-# part_match_candidates / part_match_multikey already compute — and
-# references each more than once internally (count + common join).
-# Without the persist the audit re-ran both candidate generations from
-# scratch (70 exchanges in BENCH_PLANS); with it, each blocking pass
-# materializes once per (session, sf_dir), the same contract as the
-# MinHash pair stage.
-_PART_PAIRS_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-# STALENESS CONTRACT: entries are keyed by (appId, sf_dir, which) and
-# live for the whole session — if the parquet under sf_dir is
-# REGENERATED mid-session the cached stage keeps serving the old
-# fixture (same contract as Spark's own file-status cache). Call
-# invalidate_part_pairs_cache(sf_dir=...) — or the all-caches
-# invalidate_shared_stages() — after rewriting a fixture. Inserts go
-# through _stage_cache_put (shared cap, unpersist-on-evict).
-
-
-def invalidate_part_pairs_cache(sf_dir: str | None = None) -> int:
-    """Unpersist and drop cached blocking stages; ``sf_dir=None``
-    clears everything. Returns the number of entries dropped. The
-    blocking-stage-scoped staleness hook (r8 advice); r9 generalized
-    it — invalidate_shared_stages() covers EVERY session-shared
-    persisted stage, this remains the targeted form tests use for
-    run-order-stable plans."""
-    dropped = 0
-    for key, df in list(_PART_PAIRS_CACHE.items()):
-        if sf_dir is None or key[1] == sf_dir:
-            df.unpersist()
-            del _PART_PAIRS_CACHE[key]
-            dropped += 1
-    return dropped
-
-
 def _part_pairs_shared(
     spark: SparkSession, sf_dir: str, which: str
 ) -> DataFrame:
+    """Shared persisted blocking stages (round-7 verdict item 5): the
+    recall audit re-consumes BOTH candidate relations that
+    part_match_candidates / part_match_multikey already compute — and
+    references each more than once internally (count + common join).
+    Without the persist the audit re-ran both candidate generations
+    from scratch (70 exchanges in BENCH_PLANS); with it, each blocking
+    pass materializes once per (session, sf_dir), the same contract as
+    the MinHash pair stage."""
     from genai_batch_processor_spark.operators import linkage
 
-    key = (spark.sparkContext.applicationId, sf_dir, which)
-    df = _PART_PAIRS_CACHE.get(key)
-    if df is None:
+    def build() -> DataFrame:
         parts = _parts_with_bands(spark, sf_dir)
         if which == "single":
             df = linkage.blocked_pairs(
@@ -3838,8 +3865,9 @@ def _part_pairs_shared(
                 ["p_brand", "noun"],
                 [["band_a"], ["band_b"]],
             )
-        df = _stage_cache_put(_PART_PAIRS_CACHE, key, df.persist())
-    return df
+        return df.persist()
+
+    return _shared(spark, sf_dir, "part_pairs", which, build=build)
 
 
 def q_part_match_multikey(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4010,35 +4038,29 @@ def q_dedup_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ids and silently misclassify pairs on both engines.
 INC_DEDUP_OFFSET = 10**12
 
-_INC_INDEX_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _corpus_index_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One persisted corpus band index per (session, sf_dir), shared
-    by the one-shot and streaming probes — the probe references the
-    index twice per call, and an unpersisted plan would re-shingle the
-    corpus each time (round-4 review finding)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _INC_INDEX_CACHE.get(key)
-    if df is None:
-        docs = load_table(spark, sf_dir, "documents")
-        # localCheckpoint, not persist (r14): a persisted DataFrame
-        # keeps its FULL build plan (cache substitution happens at
-        # planning, not analysis), so every probe — and the streaming
-        # twin probes PER MICRO-BATCH — re-analyzed the whole
-        # shingle/window tree on each of its ~15 eager Dataset
-        # constructions (~0.4 s/epoch of driver time, profiled). The
-        # checkpointed index is a leaf, which is also the plan shape
-        # of the at-scale path (an index LOADED from parquet via
-        # sources/index_store is a file-scan leaf). Eviction: blocks
-        # are freed by the ContextCleaner once the cache entry drops
-        # the last reference (unpersist() on a checkpointed frame is
-        # a no-op, which _stage_cache_put tolerates).
-        df = dedup.minhash_index(docs, "doc_id", "text").localCheckpoint(
-            eager=True
-        )
-        _stage_cache_put(_INC_INDEX_CACHE, key, df)
-    return df
+    """One materialized corpus band index per (session, sf_dir),
+    shared by the one-shot and streaming probes — the probe references
+    the index twice per call, and an unmaterialized plan would
+    re-shingle the corpus each time (round-4 review finding).
+
+    localCheckpoint, not persist (r14): a persisted DataFrame keeps
+    its FULL build plan (cache substitution happens at planning, not
+    analysis), so every probe — and the streaming twin probes PER
+    MICRO-BATCH — re-analyzed the whole shingle/window tree on each of
+    its ~15 eager Dataset constructions (~0.4 s/epoch of driver time,
+    profiled). The checkpointed index is a leaf, which is also the
+    plan shape of the at-scale path (an index LOADED from parquet via
+    sources/index_store is a file-scan leaf). See _shared for what
+    executor loss and eviction do to a checkpointed stage."""
+    return _shared(
+        spark,
+        sf_dir,
+        "corpus_index",
+        build=lambda: dedup.minhash_index(
+            load_table(spark, sf_dir, "documents"), "doc_id", "text"
+        ).localCheckpoint(eager=True),
+    )
 
 
 def q_incremental_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4060,33 +4082,26 @@ def q_incremental_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_EMB_INDEX_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
 def _emb_index_shared(spark: SparkSession, sf_dir: str, cents: list) -> DataFrame:
-    """One persisted trained-cell embedding index per (session, sf_dir,
-    centroid set) — the one-shot probe and its streaming twin must probe
-    the SAME materialized index (the seam _corpus_index_shared provides
-    for the MinHash family). The key carries a content fingerprint of
-    the centroids (similarity.centroid_fingerprint), mirroring how
-    _CENTROID_CACHE keys on the resolved k: a caller passing
-    differently-trained centroids (explicit KMEANS_K vs adaptive k) must
-    never be served an index assigned under the other set."""
-    key = (
-        spark.sparkContext.applicationId,
+    """One materialized trained-cell embedding index per (session,
+    sf_dir, centroid set) — the one-shot probe and its streaming twin
+    must probe the SAME materialized index (the seam
+    _corpus_index_shared provides for the MinHash family, and a
+    checkpointed leaf for the same reason: the streaming twin probes
+    per epoch). The key carries a content fingerprint of the centroids
+    (similarity.centroid_fingerprint), mirroring how the centroid
+    stage keys on the resolved k: a caller passing differently-trained
+    centroids (explicit KMEANS_K vs adaptive k) must never be served
+    an index assigned under the other set."""
+    return _shared(
+        spark,
         sf_dir,
+        "emb_index",
         similarity.centroid_fingerprint(cents),
+        build=lambda: similarity.embedding_cell_index(
+            load_table(spark, sf_dir, "embeddings"), cents
+        ).localCheckpoint(eager=True),
     )
-    index = _EMB_INDEX_CACHE.get(key)
-    if index is None:
-        emb = load_table(spark, sf_dir, "embeddings")
-        # leaf, not persisted plan — same reasoning as
-        # _corpus_index_shared (the streaming twin probes per epoch)
-        index = similarity.embedding_cell_index(
-            emb, cents
-        ).localCheckpoint(eager=True)
-        _stage_cache_put(_EMB_INDEX_CACHE, key, index)
-    return index
 
 
 def q_incremental_embedding_near_dup(
@@ -4404,22 +4419,20 @@ def q_eval_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SEMDEDUP_MAX_CELL = 512  # k-means cells are k-bounded, not 2^bits
 
-_SPAN_INDEX_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _span_index_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One persisted corpus span index per (session, sf_dir) — probes
-    must never re-shingle the indexed corpus (the same seam as the
-    MinHash band index cache)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _SPAN_INDEX_CACHE.get(key)
-    if df is None:
-        docs = load_table(spark, sf_dir, "documents")
-        # leaf, not persisted plan — same reasoning as
-        # _corpus_index_shared (the streaming twin probes per epoch)
-        df = curation.span_index(docs).localCheckpoint(eager=True)
-        _stage_cache_put(_SPAN_INDEX_CACHE, key, df)
-    return df
+    """One materialized corpus span index per (session, sf_dir) —
+    probes must never re-shingle the indexed corpus (the same seam as
+    the MinHash band index, and a checkpointed leaf for the same
+    reason as _corpus_index_shared: the streaming twin probes per
+    epoch)."""
+    return _shared(
+        spark,
+        sf_dir,
+        "span_index",
+        build=lambda: curation.span_index(
+            load_table(spark, sf_dir, "documents")
+        ).localCheckpoint(eager=True),
+    )
 
 
 def q_incremental_span_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4514,9 +4527,6 @@ def q_incremental_span_dup_stream(
         shutil.rmtree(out, ignore_errors=True)
 
 
-_SEMDEDUP_ASSIGNED_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def q_semdedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
     deduplication inside TRAINED k-means cells — cluster the embedding
@@ -4558,22 +4568,19 @@ def q_semdedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     # without the memo each invocation in one session would stack a
     # new persisted relation (round-4 advice: storage leak in
     # long-lived sessions / test loops).
-    key = (spark.sparkContext.applicationId, sf_dir)
-    assigned = _SEMDEDUP_ASSIGNED_CACHE.get(key)
-    if assigned is None:
+
+    def build() -> DataFrame:
         # fan_out before the argmin assignment so BOTH the cache build
         # and every cached-read consumer (three references per pair
         # query) run at full parallelism instead of on the one-split
         # local scan (guide §2.5; no-op at scale).
         from genai_batch_processor_spark.functions.fanout import fan_out
 
-        assigned = _stage_cache_put(
-            _SEMDEDUP_ASSIGNED_CACHE,
-            key,
-            clustering.assign_cells_auto(
-                fan_out(emb.select("vec_id", "embedding")), cents
-            ).persist(),
-        )
+        return clustering.assign_cells_auto(
+            fan_out(emb.select("vec_id", "embedding")), cents
+        ).persist()
+
+    assigned = _shared(spark, sf_dir, "semdedup_assigned", build=build)
     pairs = similarity.embedding_near_dup_pairs(
         assigned, bucket_col="cell", max_cell=SEMDEDUP_MAX_CELL
     )
@@ -5303,87 +5310,49 @@ QUERIES = {
 }
 
 
-# Session-shared persisted stages (the *_shared helpers above). A
-# query whose plan CONSUMES one of these digests an InMemoryRelation
-# once the cache is warm — so its bench plan digest depends on run
-# order within the session. bench.py stamps such entries
-# ("shared_stages" + "cache_bypassed", r8 verdict item 5) so a reader
-# of BENCH_PLANS.json knows a full-pipeline digest (e.g. the
-# 72-exchange part_match_blocking_recall) is the COLD capture of a
-# stage the timing itself read warm, not a regression.
-_SHARED_STAGE_HELPERS = (
-    "_near_dup_pairs_shared",
-    "_simhash_pairs_shared",
-    "_components_shared",
-    "_corpus_index_shared",
-    "_trained_centroids_shared",
-    "_emb_index_shared",
-    "_part_pairs_shared",
-    "_ann_truth_shared",
-    "_topk_method_shared",
-    "_ivf_scored_shared",
-    "_span_index_shared",
-)
-
-
 def shared_stage_queries() -> dict[str, list[str]]:
-    """``{query_name: [shared helpers its source calls]}`` — derived by
-    source introspection so new queries and new caches never need a
-    hand-maintained list kept in sync."""
-    import inspect
+    """``{query_name: [shared-stage helpers its source calls]}``.
 
+    A query whose plan CONSUMES a session-shared stage digests an
+    InMemoryRelation (or a checkpointed leaf) once the stage is warm,
+    so its bench plan digest depends on run order within the session.
+    bench.py stamps such entries ("shared_stages" + "cache_bypassed",
+    r8 verdict item 5) so a reader of BENCH_PLANS.json knows a
+    full-pipeline digest is the COLD capture of a stage the timing
+    itself read warm, not a regression.
+
+    Derived by source introspection: a helper is a non-query function
+    of this module that calls ``_shared`` or another helper, so a new
+    stage never needs a hand-maintained list."""
+    import inspect
+    import re
+
+    queries = set(QUERIES.values())
+    srcs = {
+        name: inspect.getsource(fn)
+        for name, fn in globals().items()
+        if inspect.isfunction(fn)
+        and fn.__module__ == __name__
+        and fn not in queries
+        and name != "_shared"
+    }
+    helpers: list[str] = []
+    callees = ["_shared"]
+    while callees:
+        call = re.compile(r"\b(?:%s)\(" % "|".join(callees))
+        callees = [
+            name
+            for name, src in srcs.items()
+            if name not in helpers and call.search(src)
+        ]
+        helpers += callees
     out: dict[str, list[str]] = {}
     for name, fn in QUERIES.items():
         try:
             src = inspect.getsource(fn)
         except (OSError, TypeError):  # pragma: no cover - builtins only
             continue
-        used = [h for h in _SHARED_STAGE_HELPERS if h in src]
+        used = [h for h in helpers if h in src]
         if used:
             out[name] = used
     return out
-
-
-# Registry of every session-shared stage cache (r9 self-review,
-# generalizing the r8 advice that named only the blocking stages).
-# DataFrame-valued caches unpersist on invalidation; the two scalar
-# caches (trained centroids, adaptive k) just drop entries. All keys
-# carry sf_dir at index 1.
-_DF_STAGE_CACHES: dict[str, dict] = {
-    "near_dup_pairs": _PAIRS_CACHE,
-    "components": _COMPONENTS_CACHE,
-    "simhash_pairs": _SIMHASH_PAIRS_CACHE,
-    "part_pairs": _PART_PAIRS_CACHE,
-    "corpus_index": _INC_INDEX_CACHE,
-    "emb_index": _EMB_INDEX_CACHE,
-    "span_index": _SPAN_INDEX_CACHE,
-    "semdedup_assigned": _SEMDEDUP_ASSIGNED_CACHE,
-    "ann_topk": _ANN_TOPK_CACHE,
-    "ivf_scored": _IVF_SCORED_CACHE,
-}
-_SCALAR_STAGE_CACHES: dict[str, dict] = {
-    "centroids": _CENTROID_CACHE,
-    "adaptive_k": _ADAPTIVE_K_CACHE,
-    "doc_count": _DOC_COUNT_CACHE,
-}
-
-
-def invalidate_shared_stages(sf_dir: str | None = None) -> int:
-    """Unpersist and drop EVERY session-shared stage (or only those
-    built over ``sf_dir``): the official staleness hook after a
-    fixture or table is regenerated mid-session — without it the
-    caches keep serving the old files, the same contract as Spark's
-    own file-status cache. Returns the number of entries dropped."""
-    dropped = 0
-    for cache in _DF_STAGE_CACHES.values():
-        for key, df in list(cache.items()):
-            if sf_dir is None or key[1] == sf_dir:
-                df.unpersist()
-                del cache[key]
-                dropped += 1
-    for cache in _SCALAR_STAGE_CACHES.values():
-        for key in list(cache):
-            if sf_dir is None or key[1] == sf_dir:
-                del cache[key]
-                dropped += 1
-    return dropped

@@ -8,6 +8,7 @@ sort-merge join, or a Python UDF sneaking into a JVM-only pipeline.
 from __future__ import annotations
 
 import re
+import time
 
 import pytest
 
@@ -15,7 +16,10 @@ from genai_batch_processor_spark import queries
 
 
 def _plan(spark, name, sf_dir):
-    df = queries.QUERIES[name](spark, sf_dir)
+    return _df_plan(spark, queries.QUERIES[name](spark, sf_dir))
+
+
+def _df_plan(spark, df):
     return spark._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )
@@ -119,12 +123,8 @@ def test_embedding_topk_broadcasts_queries(spark, sf_dir):
     the other shared-stage queries (see _plan note below)."""
     from genai_batch_processor_spark.operators import similarity
 
-    emb = queries.load_table(spark, sf_dir, "embeddings")
-    qs = emb.filter(F.col("vec_id") < queries.ANN_N_QUERIES)
-    df = similarity.topk_bruteforce(emb, qs)
-    plan = spark._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+    emb, qs = queries._ann_queries(spark, sf_dir)
+    plan = _df_plan(spark, similarity.topk_bruteforce(emb, qs))
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
     # the corpus side must not shuffle before the join
     assert plan.count("Exchange hashpartitioning") <= 2  # only the rank window
@@ -359,8 +359,13 @@ def test_int8_topk_broadcasts_queries_and_avoids_corpus_shuffle(
 ):
     """Quantized retrieve must keep the brute-force shape: query side
     broadcast, corpus never hash-shuffled except for the two per-query
-    rank windows (shortlist + final)."""
-    plan = _plan(spark, "embedding_topk_int8", sf_dir)
+    rank windows (shortlist + final). Read from the operator plan, as
+    in test_embedding_topk_broadcasts_queries: the query serves the
+    session-shared materialized top-k leaf."""
+    from genai_batch_processor_spark.operators import similarity
+
+    emb, qs = queries._ann_queries(spark, sf_dir)
+    plan = _df_plan(spark, similarity.topk_int8(emb, qs))
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
     assert plan.count("Exchange hashpartitioning") <= 4
     for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
@@ -416,92 +421,159 @@ def _fresh_part_pairs(spark):
     for the other shared stages."""
     from genai_batch_processor_spark import queries as Q
 
-    Q.invalidate_part_pairs_cache()
+    Q.invalidate_shared_stages(name="part_pairs")
 
 
-def test_part_pairs_cache_invalidation_and_cap(spark, sf_dir):
-    """r8 advice: the session-shared blocking-stage cache needs an
-    official eviction hook (fixture regenerated mid-session → stale
-    persisted stage) and a size cap (many sf_dirs in one session →
-    unbounded persisted memory). invalidate_part_pairs_cache drops and
-    unpersists by sf_dir or wholesale; inserts past the cap evict the
+def _stage_keys(name):
+    from genai_batch_processor_spark import queries as Q
+
+    return [k for k in Q._stages if k[2] == name]
+
+
+def test_part_pairs_cache_invalidation_and_cap(spark, sf_dir, monkeypatch):
+    """r8 advice: a session-shared stage needs an official eviction
+    hook (fixture regenerated mid-session → stale persisted stage) and
+    a size cap (many sf_dirs in one session → unbounded persisted
+    memory). invalidate_shared_stages drops and unpersists by sf_dir,
+    stage name, or wholesale; inserts past the per-stage cap evict the
     oldest entry, unpersisted."""
     from genai_batch_processor_spark import queries as Q
 
-    Q.invalidate_part_pairs_cache()
-    assert Q._PART_PAIRS_CACHE == {}
+    Q.invalidate_shared_stages(name="part_pairs")
+    assert _stage_keys("part_pairs") == []
 
     df = Q._part_pairs_shared(spark, sf_dir, "single")
-    assert len(Q._PART_PAIRS_CACHE) == 1
+    assert len(_stage_keys("part_pairs")) == 1
     assert df.storageLevel.useMemory  # persisted while cached
 
     # scoped invalidation: a different sf_dir string is untouched
-    assert Q.invalidate_part_pairs_cache(sf_dir="/no/such/dir") == 0
-    assert len(Q._PART_PAIRS_CACHE) == 1
-    assert Q.invalidate_part_pairs_cache(sf_dir=sf_dir) == 1
-    assert Q._PART_PAIRS_CACHE == {}
-    assert not df.storageLevel.useMemory  # unpersisted on eviction
+    assert Q.invalidate_shared_stages(sf_dir="/no/such/dir") == 0
+    assert len(_stage_keys("part_pairs")) == 1
+    assert Q.invalidate_shared_stages(sf_dir=sf_dir, name="part_pairs") == 1
+    assert _stage_keys("part_pairs") == []
+    assert not df.storageLevel.useMemory  # unpersisted on invalidation
 
-    # cap: shrink the (shared) cap to 1 and insert a second entry —
+    # cap: shrink the per-stage cap to 1 and insert a second entry —
     # the first must be evicted and unpersisted, never just dropped
-    old_cap = Q._STAGE_CACHE_MAX
+    monkeypatch.setattr(Q, "_STAGE_CACHE_MAX", 1)
     try:
-        Q._STAGE_CACHE_MAX = 1
         first = Q._part_pairs_shared(spark, sf_dir, "single")
         second = Q._part_pairs_shared(spark, sf_dir, "multi")
-        assert list(Q._PART_PAIRS_CACHE) == [
-            (spark.sparkContext.applicationId, sf_dir, "multi")
+        assert _stage_keys("part_pairs") == [
+            (spark.sparkContext.applicationId, sf_dir, "part_pairs", "multi")
         ]
         assert not first.storageLevel.useMemory
         assert second.storageLevel.useMemory
     finally:
-        Q._STAGE_CACHE_MAX = old_cap
-        Q.invalidate_part_pairs_cache()
+        Q.invalidate_shared_stages(name="part_pairs")
 
 
 def test_invalidate_shared_stages_covers_every_cache(spark, sf_dir):
-    """r9 self-review: the staleness/eviction hook must cover ALL
-    session-shared persisted stages, not just the blocking stages the
-    r8 advice named. Populate two different stage caches, invalidate
-    by sf_dir, and require both dropped and unpersisted — and the
-    registry must track every module-level *_CACHE dict so a new cache
-    cannot silently fall outside the hook."""
-    import re
-
+    """r9 self-review: the staleness hook must cover ALL session-shared
+    stages, DataFrame and scalar alike. Populate two DataFrame stages
+    and the doc-count scalar, invalidate by sf_dir, and require all
+    dropped and the DataFrames unpersisted."""
     import genai_batch_processor_spark.queries as Q
-
-    # registry completeness: every module-level *_CACHE dict is either
-    # registered or one of the two registries themselves
-    src_caches = {
-        name
-        for name in vars(Q)
-        if re.fullmatch(r"_[A-Z_]*CACHE", name) and isinstance(vars(Q)[name], dict)
-    }
-    registered = set()
-    for reg in (Q._DF_STAGE_CACHES, Q._SCALAR_STAGE_CACHES):
-        for cache in reg.values():
-            for name in src_caches:
-                if vars(Q)[name] is cache:
-                    registered.add(name)
-    assert registered == src_caches, (
-        f"unregistered stage caches: {sorted(src_caches - registered)}"
-    )
 
     Q.invalidate_shared_stages()
     pairs = Q._near_dup_pairs_shared(spark, sf_dir)
-    sim = Q._simhash_pairs_shared(spark, sf_dir)
+    sim = Q._simhash_pairs_shared(spark, sf_dir)  # also builds doc_count
     assert pairs.storageLevel.useMemory and sim.storageLevel.useMemory
+    assert _stage_keys("doc_count")
     assert Q.invalidate_shared_stages(sf_dir="/no/such/dir") == 0
-    dropped = Q.invalidate_shared_stages(sf_dir=sf_dir)
-    assert dropped >= 2
+    assert Q.invalidate_shared_stages(sf_dir=sf_dir) == 3
     assert not pairs.storageLevel.useMemory
     assert not sim.storageLevel.useMemory
-    assert all(
-        key[1] != sf_dir
-        for reg in (Q._DF_STAGE_CACHES, Q._SCALAR_STAGE_CACHES)
-        for cache in reg.values()
-        for key in cache
-    )
+    assert all(key[1] != sf_dir for key in Q._stages)
+
+
+def test_shared_stage_builds_once_under_concurrent_requests(spark):
+    """Eight threads requesting one fresh key at once run ``build``
+    once and all receive the same object (later callers wait on the
+    in-flight build instead of building again)."""
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    import genai_batch_processor_spark.queries as Q
+
+    calls = []
+    start = threading.Barrier(8)
+
+    def build():
+        calls.append(1)
+        time.sleep(0.2)  # keep the build in flight while others arrive
+        return object()
+
+    def request(_):
+        start.wait()
+        return Q._shared(spark, "/test/once", "test_once", build=build)
+
+    try:
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            got = list(pool.map(request, range(8)))
+        assert len(calls) == 1
+        assert all(g is got[0] for g in got)
+    finally:
+        Q.invalidate_shared_stages(name="test_once")
+
+
+def test_shared_stage_cap_holds_under_concurrent_inserts(spark, monkeypatch):
+    """With the per-stage cap at 1, threads inserting distinct keys at
+    once raise nothing (no KeyError from racing evictions), leave at
+    most one entry, and every DataFrame they evicted is unpersisted."""
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    import genai_batch_processor_spark.queries as Q
+
+    monkeypatch.setattr(Q, "_STAGE_CACHE_MAX", 1)
+    start = threading.Barrier(8)
+
+    def request(i):
+        start.wait()
+        return Q._shared(
+            spark,
+            "/test/cap",
+            "test_cap",
+            i,
+            build=lambda: spark.range(i + 1).persist(),
+        )
+
+    try:
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            built = list(pool.map(request, range(8)))
+        kept = {k[3] for k in _stage_keys("test_cap")}
+        assert len(kept) <= 1
+        for i, df in enumerate(built):
+            assert df.storageLevel.useMemory == (i in kept)
+    finally:
+        Q.invalidate_shared_stages(name="test_cap")
+
+
+def test_failed_shared_stage_build_leaves_no_entry(spark):
+    """A build that raises leaves no entry behind: the error reaches
+    the caller and the next call runs ``build`` again."""
+    import genai_batch_processor_spark.queries as Q
+
+    calls = []
+
+    def failing():
+        calls.append(1)
+        raise RuntimeError("build failed")
+
+    def working():
+        calls.append(1)
+        return 42
+
+    try:
+        with pytest.raises(RuntimeError, match="build failed"):
+            Q._shared(spark, "/test/fail", "test_fail", build=failing)
+        assert _stage_keys("test_fail") == []
+        assert Q._shared(spark, "/test/fail", "test_fail", build=working) == 42
+        assert len(calls) == 2
+        assert _stage_keys("test_fail") != []
+    finally:
+        Q.invalidate_shared_stages(name="test_fail")
 
 
 def test_part_match_candidates_no_single_partition(spark, sf_dir):

@@ -727,6 +727,48 @@ def test_bloom_decontamination_equals_exact(spark, bench_texts, corpus_texts):
     assert got == want
 
 
+def _hash32_collision(n_words: int, seed: int = 0) -> tuple[str, str]:
+    """Two distinct ``n_words``-word texts whose md5 hex digests share
+    their first 8 chars, i.e. equal portable_hash32: a seeded birthday
+    search (~2^16 draws expected, 2^18 at most)."""
+    import hashlib
+    import random
+
+    rng = random.Random(seed)
+    seen: dict[str, str] = {}
+    for _ in range(1 << 18):
+        text = " ".join(f"w{rng.randrange(10**6)}" for _ in range(n_words))
+        prefix = hashlib.md5(text.encode()).hexdigest()[:8]
+        other = seen.setdefault(prefix, text)
+        if other != text:
+            return other, text
+    raise AssertionError("no 32-bit md5-prefix collision found")
+
+
+def test_decontamination_ignores_32bit_hash_collisions(spark):
+    """A corpus doc whose only n-gram shares a 32-bit hash (but not its
+    text) with a benchmark n-gram is NOT contaminated: the exact and
+    Bloom operators both match on 60-bit hashes and agree; a doc with
+    the benchmark n-gram itself still gets its hit."""
+    from genai_batch_processor_spark.functions import hashing
+
+    probe, twin = _hash32_collision(dedup.CONTAMINATION_N)
+    h32 = spark.createDataFrame([(probe,), (twin,)], "t string").select(
+        hashing.portable_hash32("t").alias("h")
+    )
+    assert h32.distinct().count() == 1  # the pair really collides
+
+    bench = spark.createDataFrame([(0, probe)], "doc_id long, text string")
+    corpus = spark.createDataFrame(
+        [(1, twin), (2, probe)], "doc_id long, text string"
+    )
+    exact = dedup.contamination_hits(corpus, bench, "doc_id", "text")
+    bloom = dedup.bloom_contamination_hits(corpus, bench, "doc_id", "text")
+    want = [(2, 1)]
+    assert sorted(map(tuple, exact.collect())) == want
+    assert sorted(map(tuple, bloom.collect())) == want
+
+
 def test_bloom_bitmap_deterministic_and_sized(spark):
     docs = spark.createDataFrame(
         [(i, f"w{i} w{i+1} w{i+2} shared tail here") for i in range(30)],
