@@ -76,10 +76,10 @@ def file_leaf_stats(df: DataFrame) -> tuple[int, int] | None:
     leaves, read from the ANALYZED plan only (no optimization, no
     physical planning, no RDD conversion — analysis is work the
     downstream action needs regardless). Returns None when any leaf is
-    not a file-source relation (cached stage, local relation, range);
-    callers fall back. Also the per-micro-batch volume probe for the
-    streaming drains: a file-source micro-batch is a LogicalRelation
-    over exactly that epoch's files."""
+    not a file-source relation (cached stage, local relation, range)
+    or is a PARTITIONED one: a partition filter prunes files only
+    after analysis, so the analyzed leaf would price every partition
+    and overstate the scan. Callers fall back to an exact probe."""
     try:
         leaves = df._jdf.queryExecution().analyzed().collectLeaves()
         total = 0
@@ -90,6 +90,8 @@ def file_leaf_stats(df: DataFrame) -> tuple[int, int] | None:
                 return None
             rel = leaf.relation()
             if rel.getClass().getSimpleName() != "HadoopFsRelation":
+                return None
+            if rel.partitionSchema().length() > 0:
                 return None
             loc = rel.location()
             n_files += len(loc.inputFiles())

@@ -1,30 +1,35 @@
-"""Deterministic row ids and join-back keys.
+"""Deterministic row ids, join-back keys, and the bucket-parallel
+exclusive prefix sum they are built on.
 
 The reference relies on input *order*: ``enumerate(data)``
 (``openai_batch_processor.py:138``) and a positional zip join
 (``examples/vertex_ai/run_text_classifier.py:149``). DataFrames are
-unordered, so order must become data: ``row_number()`` over a stable key
-(NOT ``monotonically_increasing_id``, which is partition-dependent and
-non-contiguous — SURVEY.md §2 #4).
+unordered, so order must become data: a running count over a stable
+key (NOT ``monotonically_increasing_id``, which is partition-dependent
+and non-contiguous — SURVEY.md §2 #4).
 
-Scale design: a bare ``row_number()`` over an unpartitioned window is a
-single-reducer sort (every row through ONE task — impossible at 100 TB).
-``assign_ids`` instead buckets the key space by VALUE into
-deterministic, data-derived ranges: per-bucket ``row_number`` plus a
-driver-computed running offset gives the identical dense global ordinal
-with parallelism = number of buckets. Value-derived buckets (not
-``repartitionByRange``) on purpose: range-exchange boundaries come from
-per-execution sampling, and the offsets job and the final job could see
-DIFFERENT boundaries — value bucketing is a pure function of the data,
-so both jobs agree. Cost: 2 tiny agg jobs (min/max, per-bucket counts)
-before the one real shuffle; skewed key distributions skew buckets
-(raise ``buckets`` or pre-map the key if so). String keys bucket by a
-numeric PROXY — the first 7 UTF-8 bytes zero-padded and read as an
-integer — which is monotone non-decreasing w.r.t. Spark's string
-ordering (UTF8String compares raw bytes; zero-padding is the infimum
-of all extensions; the double rounding above 2^53 is itself monotone),
-so per-bucket ranking by the REAL key still composes into the exact
-global ordinal. Only exotic key types (binary, struct, …) fall back to
+Scale design: a running window with no PARTITION BY is a
+single-reducer sort (every row through ONE task — impossible at
+100 TB). :func:`exclusive_prefix_sums` instead cuts the key space into
+equal-width VALUE ranges over the key's finite [min, max]: a
+per-bucket running window plus a driver-computed per-bucket offset
+gives the identical global running sum with parallelism = number of
+buckets. ``assign_ids`` is that kernel over a constant 1 (a running
+count); ``operators.batching.plan_shards`` runs it over request bytes
+and tokens. Value-derived buckets (not ``repartitionByRange``) on
+purpose: range-exchange boundaries come from per-execution sampling,
+and the offsets job and the final job could see DIFFERENT boundaries
+— value bucketing is a pure function of the data, so both jobs agree.
+Cost: two small aggregate actions (finite min/max, per-bucket totals)
+before the one real shuffle. Buckets are equal in WIDTH, not in row
+count: a skewed key distribution makes the buckets skewed (raise
+``buckets`` or pre-map the key if so). String keys bucket by a numeric
+PROXY — the first 7 UTF-8 bytes zero-padded and read as an integer —
+which is monotone non-decreasing w.r.t. Spark's string ordering
+(UTF8String compares raw bytes; zero-padding is the infimum of all
+extensions; the double rounding above 2^53 is itself monotone), so
+per-bucket ranking by the REAL key still composes into the exact
+global order. Only exotic key types (binary, struct, …) fall back to
 the single-window path (fine for dimension-sized inputs).
 
 ``custom_id_from_key`` is the zero-shuffle path when a natural key
@@ -39,7 +44,7 @@ from pyspark.sql import types as T
 
 _NUMERIC = (
     T.ByteType, T.ShortType, T.IntegerType, T.LongType,
-    T.FloatType, T.DoubleType, T.DecimalType, T.DateType, T.TimestampType,
+    T.FloatType, T.DoubleType, T.DecimalType, T.TimestampType,
 )
 
 
@@ -48,6 +53,8 @@ def _order_proxy(order_by: str, dtype) -> Column | None:
     key's sort order — or None when the type has no cheap proxy."""
     if isinstance(dtype, _NUMERIC):
         return F.col(order_by).cast("double")
+    if isinstance(dtype, T.DateType):  # date -> double is not a legal cast
+        return F.unix_date(F.col(order_by)).cast("double")
     if isinstance(dtype, T.StringType):
         # First 7 UTF-8 bytes, zero-padded, as a base-256 integer:
         # key1 < key2 (byte-wise, which IS Spark string ordering)
@@ -61,62 +68,81 @@ def _order_proxy(order_by: str, dtype) -> Column | None:
     return None
 
 
-_BUCKET_MANTISSA_BITS = 5  # 32 sub-buckets per binary exponent
-# |finite bucket| <= (1023 + 1100) * 32 + 32 = 67968; the null/inf/NaN
-# sentinels sit JUST outside that band (not at 2^40) so the dense
-# offset array below stays bounded (<= ~136k entries) even when a key
-# column carries nulls or infinities
-_BUCKET_FINITE_MAX = (1023 + 1100) * 32 + 32
-_BUCKET_POS_INF = _BUCKET_FINITE_MAX + 1
-_BUCKET_NAN = _BUCKET_FINITE_MAX + 2
-_BUCKET_NEG_INF = -_BUCKET_FINITE_MAX - 1
-_BUCKET_NULL = -_BUCKET_FINITE_MAX - 2
+def exclusive_prefix_sums(
+    df: DataFrame,
+    *,
+    order_by: str,
+    cols: list[tuple[Column | str, str]],
+    buckets: int | None = None,
+) -> DataFrame:
+    """Running totals in ``order_by`` order, EXCLUSIVE of the current
+    row, without an unpartitioned window. ``cols`` is
+    ``[(value, out_col), ...]`` (value: column name or Column); each
+    ``out_col`` is a long, 0 on the first row.
 
-
-def _scale_free_bucket(knum: Column) -> Column:
-    """DATA-INDEPENDENT, monotone non-decreasing bucket id for a double
-    proxy: ``(floor(log2(|v|)) + bias) * 32 + mantissa_slice``, signed
-    (r13 verdict item 5 — the previous min/max-derived equal-width
-    buckets cost two driver-blocking aggregate jobs per call before the
-    real shuffle). Effectively the top bits of the IEEE-754 sortable
-    representation, expressed with SQL math: one bucket per 1/32 of a
-    binary exponent, so any key distribution spreads over
-    #exponents × 32 ordered intervals with no data statistics at all.
-
-    Monotone under floating-point error by construction: if
-    ``floor(log2(v))`` lands one off at an exponent boundary, the
-    mantissa term lands at -1 or 32 and the composed id equals the
-    adjacent exponent's boundary id exactly ((e+1)*32 + 0 ==
-    e*32 + 32), so ordering is preserved; e is clamped to the finite
-    double exponent range so ``pow(2, e)`` never over/underflows.
-    Ordering of the sentinels mirrors Spark's sort order: NULL first,
-    then -Inf < finite < +Inf < NaN."""
-    mb = 1 << _BUCKET_MANTISSA_BITS
-
-    def pos(v: Column) -> Column:
-        e = F.greatest(
-            F.least(F.floor(F.log2(v)), F.lit(1023)), F.lit(-1074)
+    Rows are bucketed into ``buckets`` (default 2 × default
+    parallelism) equal-width ranges over the finite [min, max] of the
+    key's proxy; NULL, -Inf, +Inf and NaN keys take fixed edge buckets
+    in Spark's ascending sort order (NULL first, NaN last). One
+    collect of per-bucket totals (all ``cols`` aggregated together)
+    gives each bucket's offset, shipped as ONE literal map (folded to
+    a constant by the optimizer); within a bucket a window ordered by
+    ``order_by`` supplies the local running sum. Keys without a proxy,
+    ``buckets <= 1``, and inputs without a usable finite range take
+    the single-window reference path. Ties in ``order_by`` are ordered
+    arbitrarily, as on the reference path."""
+    vals = [F.col(v) if isinstance(v, str) else v for v, _ in cols]
+    knum = _order_proxy(order_by, df.schema[order_by].dataType)
+    if buckets is None:
+        buckets = df.sparkSession.sparkContext.defaultParallelism * 2
+    width = 0.0
+    if knum is not None and buckets > 1:
+        finite = F.when(
+            ~F.isnan(knum) & (F.abs(knum) != F.lit(float("inf"))), knum
         )
-        frac = v / F.pow(F.lit(2.0), e)
-        m = F.greatest(
-            F.least(
-                F.floor((frac - F.lit(1.0)) * F.lit(float(mb))),
-                F.lit(mb),
-            ),
-            F.lit(-1),
+        lo, hi = df.agg(F.min(finite), F.max(finite)).first()
+        if lo is not None:
+            # divided before subtracting: hi - lo overflows at ±1.8e308
+            width = hi / buckets - lo / buckets
+    w = Window.orderBy(order_by)
+    offsets = None
+    if width > 0:
+        bucket = (
+            F.when(knum.isNull(), F.lit(-2))
+            .when(knum == F.lit(float("-inf")), F.lit(-1))
+            .when(knum == F.lit(float("inf")), F.lit(buckets))
+            .when(F.isnan(knum), F.lit(buckets + 1))
+            .otherwise(
+                # k/width - lo/width: monotone in k, never overflows
+                F.least(
+                    F.floor(knum / F.lit(width) - F.lit(lo / width)),
+                    F.lit(buckets - 1),
+                )
+            )
+            .cast("int")
         )
-        return (e + F.lit(1100)) * F.lit(mb) + m
-
-    return (
-        F.when(knum.isNull(), F.lit(_BUCKET_NULL))
-        .when(F.isnan(knum), F.lit(_BUCKET_NAN))
-        .when(knum == F.lit(float("inf")), F.lit(_BUCKET_POS_INF))
-        .when(knum == F.lit(float("-inf")), F.lit(_BUCKET_NEG_INF))
-        .when(knum == F.lit(0.0), F.lit(0))
-        .when(knum > 0, pos(knum))
-        .otherwise(-pos(-knum))
-        .cast("long")
-    )
+        df = df.withColumn("__psb", bucket)
+        totals = sorted(
+            tuple(r)
+            for r in df.groupBy("__psb")
+            .agg(*[F.sum(v).cast("long") for v in vals])
+            .collect()
+        )
+        entries = []
+        acc = [0] * len(vals)
+        for b, *tots in totals:
+            offs = F.array(*[F.lit(a).cast("long") for a in acc])
+            entries += [F.lit(b), offs]
+            acc = [a + (t or 0) for a, t in zip(acc, tots)]
+        offsets = F.create_map(*entries)[F.col("__psb")]
+        w = Window.partitionBy("__psb").orderBy(order_by)
+    w = w.rowsBetween(Window.unboundedPreceding, -1)
+    for i, (v, (_, out_col)) in enumerate(zip(vals, cols)):
+        running = F.coalesce(F.sum(v).over(w), F.lit(0))
+        if offsets is not None:
+            running = running + offsets[i]
+        df = df.withColumn(out_col, running.cast("long"))
+    return df.drop("__psb")
 
 
 def assign_ids(
@@ -126,82 +152,11 @@ def assign_ids(
     buckets: int | None = None,
 ) -> DataFrame:
     """0-based dense ordinal by ``order_by`` (reference ``enumerate``
-    semantics, oai:138), computed with bucket-parallel ranking.
-
-    ONE pre-job instead of two (r13 verdict item 5): the bucket id is
-    a DATA-INDEPENDENT monotone function of the key
-    (:func:`_scale_free_bucket`), so the min/max statistics job — and
-    its full input scan — are gone entirely; the single remaining job
-    collects the bounded per-fine-bucket counts (<= ~136k tiny rows by
-    construction, in practice tens-to-hundreds). The window then
-    partitions by the fine bucket DIRECTLY (more parallelism than the
-    old 64 equal-width buckets, and count-skew-free: a bucket spans
-    1/32 of a binary exponent, so no hot key range can overload one
-    the way equal-WIDTH buckets could), and each row's global offset
-    is an O(1) ``element_at`` into a DENSE offset array spanning the
-    observed bucket range — shipped as one constant-folded ``from_json``
-    literal, NOT an ``F.array`` of per-element literals (measured: the
-    unfolded CreateArray re-materialized the array per row, and a
-    higher-order filter re-evaluated the bucket expression per
-    element; both cost ~0.25 s/action at sf0.1 — the folded literal
-    matches the old design's wall time exactly while staying O(1) per
-    row at any scale). 2 input passes total instead of 3.
-    ``buckets <= 1`` forces the single-window fallback (tests use it
-    as the semantics reference); the value is otherwise ignored — the
-    bucket function is scale-free."""
-    import json
-
-    key = F.col(order_by)
-    dtype = df.schema[order_by].dataType
-
-    knum = _order_proxy(order_by, dtype)
-    if knum is None or (buckets is not None and buckets <= 1):
-        w = Window.orderBy(key)
-        return df.withColumn(id_col, F.row_number().over(w) - F.lit(1))
-
-    fine = _scale_free_bucket(knum)
-    bucketed = df.withColumn("__fine", fine)
-    counts = sorted(
-        (r["__fine"], r["cnt"])
-        for r in bucketed.groupBy("__fine")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .collect()
-    )
-    if not counts:
-        w = Window.orderBy(key)
-        return df.withColumn(id_col, F.row_number().over(w) - F.lit(1))
-    lo_b, hi_b = counts[0][0], counts[-1][0]
-    # dense exclusive-prefix-sum array over [lo_b, hi_b]; unobserved
-    # buckets inherit the previous offset (a row can only land there
-    # if the input changed between the counts job and the action —
-    # static by contract — and then it degrades to the nearest
-    # boundary, mirroring the old design's F.least clamp)
-    offs: dict[int, int] = {}
-    acc = 0
-    for b, c in counts:
-        offs[b] = acc
-        acc += c
-    dense: list[int] = []
-    last = 0
-    for b in range(lo_b, hi_b + 1):
-        if b in offs:
-            last = offs[b]
-        dense.append(last)
-    off_arr = F.from_json(F.lit(json.dumps(dense)), "array<bigint>")
-    slot = (
-        F.greatest(F.least(F.col("__fine"), F.lit(hi_b)), F.lit(lo_b))
-        - F.lit(lo_b)
-        + 1
-    ).cast("int")
-    w = Window.partitionBy("__fine").orderBy(key)
-    return (
-        bucketed.withColumn(
-            id_col,
-            (
-                F.row_number().over(w) - 1 + F.element_at(off_arr, slot)
-            ).cast("long"),
-        )
-        .drop("__fine")
+    semantics, oai:138): :func:`exclusive_prefix_sums` over a constant
+    1. ``buckets <= 1`` forces the single-window reference path (tests
+    use it as the semantics reference)."""
+    return exclusive_prefix_sums(
+        df, order_by=order_by, cols=[(F.lit(1), id_col)], buckets=buckets
     )
 
 

@@ -16,10 +16,11 @@ things become first-class relational problems:
    Batch limits are 50,000 requests / 200 MB per file, plus a
    per-model cap on ENQUEUED PROMPT TOKENS across the batch queue — a
    line/byte-legal file can still be token-illegal to enqueue).
-   ``plan_shards`` assigns every row a shard honoring all caps, using
-   bucket-parallel exclusive prefix sums over the request-byte (and
-   optionally request-token) columns — no single-reducer window (same
-   two-job offset composition as ``functions.ids.assign_ids``). With a
+   ``plan_shards`` assigns every row a shard honoring all caps from
+   exclusive running totals of the request-byte (and optionally
+   request-token) columns in id order, computed by the same
+   bucket-parallel kernel as ``functions.ids.assign_ids``
+   (``ids.exclusive_prefix_sums``) — no single-reducer window. With a
    token budget, each shard's total is ≤ ``max_tokens``, so an
    orchestrator controls enqueued tokens by bounding in-flight shards.
 3. **Training consumption needs a deterministic global shuffle.**
@@ -38,7 +39,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from genai_batch_processor_spark.functions import hashing
+from genai_batch_processor_spark.functions import hashing, ids
 
 # Public OpenAI Batch API file caps (requests per file / bytes per file).
 OPENAI_MAX_LINES = 50_000
@@ -112,85 +113,6 @@ def fan_out_responses(
 # -- 2. capped shard planning (bucket-parallel prefix sum) -------------------
 
 
-def exclusive_prefix_sum(
-    df: DataFrame,
-    *,
-    order_col: str,
-    value_col: str,
-    out_col: str,
-    buckets: int | None = None,
-) -> DataFrame:
-    """Running total of ``value_col`` over ``order_col`` order,
-    EXCLUSIVE of the current row, without an unpartitioned window.
-
-    ``order_col`` must be a dense 0-based ordinal (assign_ids output).
-    The ordinal space is cut into ``buckets`` equal ranges; a per-bucket
-    partitioned window computes local running sums and one tiny agg job
-    (``buckets`` rows collected) supplies each bucket's starting offset
-    — the same two-job composition as ``functions.ids.assign_ids``, so
-    parallelism is ``buckets``, not 1.
-    """
-    return exclusive_prefix_sums(
-        df, order_col=order_col, cols=[(value_col, out_col)],
-        buckets=buckets,
-    )
-
-
-def exclusive_prefix_sums(
-    df: DataFrame,
-    *,
-    order_col: str,
-    cols: list[tuple[str, str]],
-    buckets: int | None = None,
-) -> DataFrame:
-    """:func:`exclusive_prefix_sum` over SEVERAL value columns in one
-    pass: one bucket assignment, one per-bucket totals job (all sums
-    aggregated together), one shared per-bucket window — so a planner
-    capping on bytes AND tokens pays one prefix-sum pass, not two.
-    ``cols`` is ``[(value_col, out_col), ...]``."""
-    spark = df.sparkSession
-    if buckets is None:
-        buckets = spark.sparkContext.defaultParallelism * 2
-    n = df.agg(F.max(order_col)).first()[0]
-    if n is None:
-        out = df
-        for _, out_col in cols:
-            out = out.withColumn(out_col, F.lit(None).cast("long"))
-        return out
-    span = max(1, (int(n) + buckets) // buckets)
-    bucket = (F.col(order_col) / F.lit(span)).cast("long")
-    bucketed = df.withColumn("__psb", bucket)
-    totals_rows = (
-        bucketed.groupBy("__psb")
-        .agg(
-            *[
-                F.sum(vc).cast("long").alias(f"__tot{i}")
-                for i, (vc, _) in enumerate(cols)
-            ]
-        )
-        .collect()
-    )
-    w = (
-        Window.partitionBy("__psb")
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    out = bucketed
-    for i, (vc, out_col) in enumerate(cols):
-        totals = {r["__psb"]: r[f"__tot{i}"] for r in totals_rows}
-        offsets: dict[int, int] = {}
-        acc = 0
-        for b in sorted(totals):
-            offsets[b] = acc
-            acc += totals[b]
-        offset_map = F.create_map(
-            *[F.lit(v) for kv in offsets.items() for v in kv]
-        )
-        local = F.coalesce(F.sum(vc).over(w).cast("long"), F.lit(0))
-        out = out.withColumn(out_col, local + offset_map[F.col("__psb")])
-    return out.drop("__psb")
-
-
 def plan_shards(
     df: DataFrame,
     *,
@@ -226,7 +148,7 @@ def plan_shards(
     floors are nondecreasing in id order, so runs stay contiguous, and
     each run's byte and token totals are ≤ their caps by the same
     budget-shrinking argument applied per dimension. Both prefix sums
-    share one bucket pass (:func:`exclusive_prefix_sums`). An
+    share one bucket pass (``ids.exclusive_prefix_sums``). An
     orchestrator holding at most Q/max_tokens shards in flight then
     never exceeds a queue-wide quota Q.
 
@@ -262,8 +184,8 @@ def plan_shards(
             )
         tok_budget = max(1, max_tokens - int(max_row_tok))
         sums.append((tokens_col, "__cum_toks"))
-    with_cum = exclusive_prefix_sums(
-        df, order_col=id_col, cols=sums, buckets=buckets
+    with_cum = ids.exclusive_prefix_sums(
+        df, order_by=id_col, cols=sums, buckets=buckets
     )
     byte_shard = (F.col("__cum_bytes") / F.lit(budget)).cast("long")
     with_bs = with_cum.withColumn("byte_shard", byte_shard)

@@ -23,9 +23,8 @@ def _sized_docs(spark, sf_dir):
 def test_exclusive_prefix_sum_matches_pandas(spark, sf_dir):
     sized = _sized_docs(spark, sf_dir)
     got = (
-        batching.exclusive_prefix_sum(
-            sized, order_col="idx", value_col="n_bytes", out_col="cum",
-            buckets=7,
+        ids.exclusive_prefix_sums(
+            sized, order_by="idx", cols=[("n_bytes", "cum")], buckets=7
         )
         .select("idx", "n_bytes", "cum")
         .toPandas()
@@ -250,9 +249,9 @@ def test_exclusive_prefix_sums_multi_column(spark, sf_dir):
     sized = _sized_docs(spark, sf_dir).withColumn(
         "n2", (F.col("n_bytes") % 7).cast("long")
     )
-    fused = batching.exclusive_prefix_sums(
+    fused = ids.exclusive_prefix_sums(
         sized,
-        order_col="idx",
+        order_by="idx",
         cols=[("n_bytes", "c1"), ("n2", "c2")],
         buckets=6,
     )

@@ -1,6 +1,6 @@
-"""Round-14 optimization internals: the fan_out split estimator, the
-volume-derived streaming drain partitions, and the scale-free
-assign_ids bucket function (r13 verdict items 1, 5, 7)."""
+"""Scale internals: the fan_out split estimator, the streaming drain's
+partition count, and the bucket-parallel prefix-sum kernel behind
+assign_ids."""
 
 from __future__ import annotations
 
@@ -44,6 +44,24 @@ def test_fan_out_skips_when_floor_met(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     out = fanout.fan_out(docs, floor=1)
     assert out is docs  # same object: no repartition applied
+
+
+def test_fan_out_fires_on_partition_pruned_scan(spark, tmp_path):
+    """A partition filter prunes files after analysis, so the analyzed
+    leaf prices all 8 partitions while the scan reads one file: the
+    estimator must decline and fan_out must take the exact probe."""
+    path = str(tmp_path / "parted")
+    (
+        spark.range(0, 8000, 1, 1)
+        .withColumn("part", F.col("id") % 8)
+        .write.partitionBy("part")
+        .parquet(path)
+    )
+    one = spark.read.parquet(path).filter(F.col("part") == 3)
+    assert fanout.file_leaf_stats(one) is None
+    fanned = fanout.fan_out(one, floor=4)
+    plan = fanned._jdf.queryExecution().executedPlan().toString()
+    assert "RoundRobinPartitioning" in plan
 
 
 def test_min_tasks_env_override_validated(spark, sf_dir, monkeypatch):
@@ -94,14 +112,19 @@ def test_stream_state_partitions_derives_from_path(spark, sf_dir):
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev
 
 
-def test_drain_sizes_epochs_to_batch_volume(spark, tmp_path):
-    """_drain_foreach_batch must size spark.sql.shuffle.partitions per
-    epoch from that epoch's file bytes (r13 verdict item 1: the
-    constant 8 would serialize catch-up epochs at scale)."""
+def test_drain_micro_batches_plan_with_start_scope(
+    spark, tmp_path, monkeypatch
+):
+    """Every micro-batch of _drain_foreach_batch must plan its shuffles
+    with the count set at drain start: a batch_df-rooted aggregation
+    and an outer-session-rooted join both see the override (5, neither
+    the floor nor the session default), and the outer conf is restored
+    after the drain."""
     import shutil
 
     from genai_batch_processor_spark.streaming import ingest
 
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_PARTITIONS", "5")
     src = str(tmp_path / "src")
     for i in range(2):
         (
@@ -109,10 +132,16 @@ def test_drain_sizes_epochs_to_batch_volume(spark, tmp_path):
             .write.mode("append")
             .parquet(src)
         )
-    seen: list[int] = []
+    seen: list[tuple[int, int]] = []
 
-    def probe(batch_df, epoch_id):
-        seen.append(int(spark.conf.get("spark.sql.shuffle.partitions")))
+    def process(batch_df, epoch_id):
+        agg = batch_df.groupBy(F.col("id") % 3).count()
+        join = spark.range(200).join(
+            batch_df.hint("shuffle_merge"), "id"
+        )
+        seen.append(
+            (agg.rdd.getNumPartitions(), join.rdd.getNumPartitions())
+        )
 
     stream = (
         spark.readStream.schema("id long")
@@ -120,16 +149,21 @@ def test_drain_sizes_epochs_to_batch_volume(spark, tmp_path):
         .parquet(src)
     )
     ckpt = str(tmp_path / "ckpt")
+    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        ingest._drain_foreach_batch(spark, stream, probe, ckpt)
+        ingest._drain_foreach_batch(spark, stream, process, ckpt)
+        restored = spark.conf.get("spark.sql.shuffle.partitions")
     finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
         shutil.rmtree(ckpt, ignore_errors=True)
-    assert len(seen) == 2
-    # tiny epochs -> the small floor, derived per epoch
-    assert all(n == sw.STREAM_PARTITIONS_BASE for n in seen)
+    assert prev_parts != "5"
+    assert seen == [(5, 5), (5, 5)]
+    assert restored == prev_parts
 
 
-# -- scale-free assign_ids bucketing -----------------------------------------
+# -- assign_ids / the prefix-sum kernel ------------------------------------
 
 
 def _adversarial_doubles() -> list[float | None]:
@@ -159,31 +193,46 @@ def _adversarial_doubles() -> list[float | None]:
     return vals
 
 
-def test_scale_free_bucket_monotone_on_adversarial_doubles(spark):
-    """The data-independent bucket id must be monotone non-decreasing
-    w.r.t. Spark's double sort order (NULL first, NaN last), including
-    at power-of-two boundaries, denormals and the exponent extremes —
-    the property the exact-global-ordinal composition rests on."""
+def test_assign_ids_matches_single_window_on_adversarial_doubles(spark):
+    """The equal-width buckets must compose into the single-window
+    reference order on doubles that stress the bucket bounds: NULL,
+    ±0, ±Inf, NaN, denormals, power-of-two boundaries and ±1.797e308.
+    Keys are compared in idx order; NULL and ±0 ties compare as
+    blocks (their order within the block is arbitrary)."""
     vals = _adversarial_doubles()
     df = spark.createDataFrame(
         [(i, v) for i, v in enumerate(vals)], "rid long, key double"
     )
-    out = (
-        df.withColumn("b", ids._scale_free_bucket(F.col("key")))
-        .orderBy(F.col("key").asc_nulls_first())
-        .select("key", "b")
-        .collect()
-    )
-    buckets = [r["b"] for r in out]
-    assert buckets == sorted(buckets), "bucket id not monotone in key order"
+
+    def keys_in_idx_order(out):
+        return [
+            "null" if k is None else "nan" if math.isnan(k) else k + 0.0
+            for k in (
+                r["key"] for r in out.orderBy("idx").select("key").collect()
+            )
+        ]
+
+    got = keys_in_idx_order(ids.assign_ids(df, "key"))
+    want = keys_in_idx_order(ids.assign_ids(df, "key", buckets=1))
+    assert len(got) == len(vals)
+    assert got == want
 
 
 def test_assign_ids_one_pass_matches_single_window(spark):
-    """The collect-free bucketed path must produce the exact ordinals
-    of the single-window reference on unique keys of every proxy
-    type."""
+    """The bucketed path must produce the exact ordinals of the
+    single-window reference on unique keys of every proxy type."""
+    import datetime
+
     random.seed(11)
+    day0 = datetime.date(1970, 1, 1)
     for schema, keys in [
+        (
+            "key date",
+            [
+                day0 + datetime.timedelta(days=d)
+                for d in random.sample(range(-30000, 30000), 300)
+            ],
+        ),
         ("key long", random.sample(range(-(10**12), 10**12), 300)),
         ("key double", [random.uniform(-1e300, 1e300) for _ in range(300)]),
         (
@@ -201,21 +250,29 @@ def test_assign_ids_one_pass_matches_single_window(spark):
         assert got == want, f"ordinal mismatch for {schema}"
 
 
-def test_assign_ids_single_bounded_pre_job(spark, sf_dir):
-    """The ordinal preamble must run exactly ONE bounded job (the
-    counts materialization) — one fewer than the old min/max +
-    counts-collect pair (r13 verdict item 5) — and the final plan must
-    stay free of SinglePartition exchanges."""
+def test_assign_ids_two_bounded_pre_actions(spark, sf_dir):
+    """The ordinal preamble runs exactly two bounded aggregate actions
+    (finite min/max, per-bucket totals — at most 4 scheduler jobs under
+    AQE), the final plan stays free of SinglePartition exchanges, and
+    the bucket offsets reach the optimized plan as ONE folded map
+    literal (no per-row array or map construction)."""
     docs = load_table(spark, sf_dir, "documents")
+    docs.count()  # warm the file listing outside the measured window
     sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    store = spark._jsparkSession.sharedState().statusStore()
     tracker = sc.statusTracker()
-    before = tracker.getJobIdsForGroup(None)
+    bus.waitUntilEmpty()
+    execs_before = store.executionsCount()
+    jobs_before = len(tracker.getJobIdsForGroup(None))
     out = ids.assign_ids(docs, "doc_id")
-    after = tracker.getJobIdsForGroup(None)
-    n_prejobs = len(after) - len(before)
-    assert n_prejobs <= 2, f"expected <= 2 scheduler jobs, saw {n_prejobs}"
-    # one ACTION: the counts collect (AQE may split it into two
-    # scheduler jobs); the old design ran two actions (min/max +
-    # counts), i.e. 2x the scheduler jobs whatever AQE does
+    bus.waitUntilEmpty()
+    n_actions = store.executionsCount() - execs_before
+    n_jobs = len(tracker.getJobIdsForGroup(None)) - jobs_before
+    assert n_actions == 2, f"expected 2 pre-actions, saw {n_actions}"
+    assert 2 <= n_jobs <= 4, f"expected <= 4 scheduler jobs, saw {n_jobs}"
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "SinglePartition" not in plan
+    opt = out._jdf.queryExecution().optimizedPlan().toString()
+    assert opt.count("map(keys: [") == 1, opt
+    assert "array(" not in opt and "from_json" not in opt, opt
